@@ -11,7 +11,12 @@ sizes. Parts are processed in waves; each wave
 1. writes extracted rows under ``data/part_id=<p>/`` (dynamic partition
    overwrite — a re-run of an uncommitted part replaces, never duplicates);
 2. then appends one lineage row per part ``(run_id, part_id, n_parts, status,
-   n_turns, nodes_classified, spans_emitted, parse_failures, committed_at)``.
+   n_turns, nodes_classified, spans_emitted, parse_failures, errors,
+   committed_at)``. The metrics are aggregated from the wave's own
+   partitions only (``read_data_partitions``) and collected — at most one
+   row per part — so a commit never lists or scans the rest of the growing
+   table; the rows are appended from a driver-local Arrow relation
+   (``commit_rows``), not a parallelized RDD.
 
 A crash between (1) and (2) leaves data without lineage; resume reprocesses
 that part and the overwrite makes it idempotent. On restart, committed parts
@@ -34,9 +39,12 @@ from __future__ import annotations
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 #: AnalysisException conditions meaning "the input does not exist yet" —
 #: the ONLY failures that may degrade to first-run/empty semantics. Anything
@@ -71,20 +79,22 @@ def is_missing_input(e: Exception) -> bool:
 
 from docling_gfcr_spark import pipeline
 
+#: every lineage column is required: a commit row never holds a null
 LINEAGE_SCHEMA = (
-    "run_id string, part_id int, n_parts int, status string, n_turns long, "
-    "nodes_classified long, spans_emitted long, parse_failures long, errors long, "
-    "committed_at double"
+    "run_id string NOT NULL, part_id int NOT NULL, n_parts int NOT NULL, "
+    "status string NOT NULL, n_turns long NOT NULL, nodes_classified long NOT NULL, "
+    "spans_emitted long NOT NULL, parse_failures long NOT NULL, errors long NOT NULL, "
+    "committed_at double NOT NULL"
 )
-_LINEAGE_COLS = [f.split(" ")[0] for f in LINEAGE_SCHEMA.split(", ")]
 
 
 class ParquetStorage:
     """Plain-parquet storage layer (the sandbox implementation).
 
-    The interface is three methods; an Iceberg implementation maps them to
-    ``writeTo(...).overwritePartitions()`` / ``writeTo(...).append()`` /
-    ``spark.read.table(...)`` with the same wave-commit semantics.
+    The interface is two writes and three reads; an Iceberg implementation
+    maps them to ``writeTo(...).overwritePartitions()`` /
+    ``writeTo(...).append()`` / ``spark.read.table(...)`` with the same
+    wave-commit semantics.
     """
 
     def __init__(self, spark: SparkSession, out_dir: str) -> None:
@@ -109,23 +119,20 @@ class ParquetStorage:
     def read_data(self) -> DataFrame:
         return self.spark.read.parquet(self.data_dir)
 
-    def read_data_partition(self, part_id: int) -> DataFrame:
-        """Scan exactly one ``part_id`` partition by path — file listing
-        touches ONE directory instead of the whole (growing) table, so
-        per-batch metric reads stay O(batch) as history accumulates. The
-        partition column itself is not in the result (it lives in the path).
-        """
-        return self.spark.read.parquet(f"{self.data_dir}/part_id={int(part_id)}")
-
-    def data_partition_exists(self, part_id: int) -> bool:
-        """Explicit existence probe via the Hadoop FileSystem API — upsert
-        classifies brand-new buckets with this instead of substring-matching
-        exception text, which a Spark version or locale change would break
-        (round-4 ADVICE finding)."""
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(f"{self.data_dir}/part_id={int(part_id)}")
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(p))
+    def read_data_partitions(self, part_ids: list[int]) -> DataFrame:
+        """Scan exactly the given ``part_id`` partitions by path, with
+        ``part_id`` in the result — file listing touches only their
+        directories instead of the whole (growing) table, so per-wave reads
+        stay O(wave) as history accumulates. A part never written has no
+        directory and is skipped (an existence probe through the Hadoop
+        FileSystem API, not exception text); when none exists the read
+        raises the missing-path ``AnalysisException``, as a read of a
+        missing table does."""
+        Path = self.spark._jvm.org.apache.hadoop.fs.Path
+        fs = Path(self.data_dir).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        paths = [f"{self.data_dir}/part_id={int(p)}" for p in part_ids]
+        found = [p for p in paths if fs.exists(Path(p))]
+        return self.spark.read.option("basePath", self.data_dir).parquet(*(found or paths[:1]))
 
     def read_lineage(self) -> DataFrame | None:
         try:
@@ -191,14 +198,11 @@ class IcebergStorage:
     def read_data(self) -> DataFrame:
         return self.spark.read.table(self.data_table)
 
-    def read_data_partition(self, part_id: int) -> DataFrame:
-        # catalog tables prune on the partition predicate; no path surgery
-        return self.read_data().where(F.col("part_id") == int(part_id)).drop("part_id")
-
-    def data_partition_exists(self, part_id: int) -> bool:
-        # a catalog table's missing partition reads as an EMPTY frame (no
-        # PATH_NOT_FOUND to classify) — existence reduces to table existence
-        return bool(self.spark.catalog.tableExists(self.data_table))
+    def read_data_partitions(self, part_ids: list[int]) -> DataFrame:
+        # catalog tables prune on the partition predicate; no path surgery.
+        # A missing partition reads as no rows; a missing table raises
+        # TABLE_OR_VIEW_NOT_FOUND
+        return self.read_data().where(F.col("part_id").isin([int(p) for p in part_ids]))
 
     def read_lineage(self) -> DataFrame | None:
         try:
@@ -209,6 +213,62 @@ class IcebergStorage:
 
 def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
     return df.withColumn("part_id", F.pmod(F.xxhash64("conv_id"), F.lit(n_parts)).cast("int"))
+
+
+def commit_rows(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-side commit rows as a frame planned over a ``LocalRelation``.
+
+    ``createDataFrame(list)`` plans a ``LogicalRDD`` over ``parallelize``,
+    and appending one schedules a job over the parallelized rows; a
+    ``pyarrow.Table`` built with the exact ``schema`` (a DDL string,
+    nullability included) plans as a local relation, with the Arrow conf on
+    or off, and appends several times faster.
+    """
+    arrow_schema = to_arrow_schema(DataType.fromDDL(schema))
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow_schema.names, r)) for r in rows], schema=arrow_schema
+    )
+    return spark.createDataFrame(table)
+
+
+def commit_parts(
+    spark: SparkSession, storage: ParquetStorage, part_ids: list[int], run_id: str,
+    n_parts: int,
+) -> None:
+    """Append one committed lineage row per part in ``part_ids``, its
+    metrics aggregated from ONLY those partitions and collected to the
+    driver (at most one row per part).
+
+    Parts with no rows still commit, with all-zero metrics — else they would
+    be retried forever. A read that finds no data at all (a sparse first
+    wave writes nothing, so the data dir or table does not exist yet) is the
+    ONLY read failure that may degrade to zeros: any other (permissions,
+    corrupt footer) must fail the commit, not fabricate all-zero metrics.
+    """
+    try:
+        data = storage.read_data_partitions(part_ids)
+    except AnalysisException as e:
+        # missing dir -> PATH_NOT_FOUND; dir created but no files yet ->
+        # UNABLE_TO_INFER_SCHEMA; Iceberg twin -> TABLE_OR_VIEW_NOT_FOUND
+        if not is_missing_input(e):
+            raise
+        data = None
+    metrics = {}
+    if data is not None:
+        for r in data.groupBy("part_id").agg(
+            F.count("*").alias("n_turns"),
+            F.sum("n_nodes").alias("nodes_classified"),
+            F.sum("n_spans").alias("spans_emitted"),
+            F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
+            F.sum((~F.col("success")).cast("long")).alias("errors"),
+        ).collect():
+            metrics[r.part_id] = tuple(v or 0 for v in r[1:])
+    now = time.time()
+    rows = [
+        (run_id, p, n_parts, "committed", *metrics.get(p, (0,) * 5), now)
+        for p in part_ids
+    ]
+    storage.append_lineage(commit_rows(spark, rows, LINEAGE_SCHEMA))
 
 
 def committed_parts(storage: ParquetStorage, n_parts: int) -> set[int]:
@@ -279,53 +339,7 @@ def run_extraction_job(
         )
         extracted = with_part_id(extracted, n_parts)
         storage.overwrite_data_partitions(extracted.repartition(max(len(wave), 1), "part_id"))
-        # a wave whose parts hold NO rows (sparse corpus vs large n_parts)
-        # writes nothing — on the very first such wave the data dir does not
-        # exist yet, so the metrics read must degrade to all-zero rows. ONLY
-        # the missing-path/table case may degrade: any other read failure
-        # (permissions, corrupt footer) must fail the wave, not commit it
-        # with fabricated all-zero metrics
-        try:
-            data = storage.read_data()
-        except AnalysisException as e:
-            # missing dir -> PATH_NOT_FOUND; dir created but no files yet ->
-            # UNABLE_TO_INFER_SCHEMA; Iceberg twin -> TABLE_OR_VIEW_NOT_FOUND
-            if not is_missing_input(e):
-                raise
-            data = None
-        agg = (
-            data.where(F.col("part_id").isin(wave))
-            .groupBy("part_id")
-            .agg(
-                F.count("*").alias("n_turns"),
-                F.sum("n_nodes").alias("nodes_classified"),
-                F.sum("n_spans").alias("spans_emitted"),
-                F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
-                F.sum((~F.col("success")).cast("long")).alias("errors"),
-            )
-            if data is not None
-            else None
-        )
-        # empty parts must still commit (else they would be retried forever)
-        wave_parts = spark.createDataFrame([(p,) for p in wave], "part_id int")
-        if agg is None:
-            wave_parts = (
-                wave_parts.withColumn("n_turns", F.lit(0).cast("long"))
-                .withColumn("nodes_classified", F.lit(0).cast("long"))
-                .withColumn("spans_emitted", F.lit(0).cast("long"))
-                .withColumn("parse_failures", F.lit(0).cast("long"))
-                .withColumn("errors", F.lit(0).cast("long"))
-            )
-        metrics = (
-            (wave_parts if agg is None else wave_parts.join(agg, "part_id", "left"))
-            .na.fill(0)
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("n_parts", F.lit(n_parts))
-            .withColumn("status", F.lit("committed"))
-            .withColumn("committed_at", F.lit(time.time()))
-            .select(*_LINEAGE_COLS)
-        )
-        storage.append_lineage(metrics)
+        commit_parts(spark, storage, wave, run_id, n_parts)
         processed.extend(wave)
         if fail_after_wave is not None and wi + 1 >= fail_after_wave:
             raise RuntimeError(f"injected crash after wave {wi + 1}")
@@ -392,9 +406,6 @@ def upsert_extracted(
     the lineage n_parts check, like resume). Returns
     ``{"touched_parts", "n_updates", "run_id"}``.
     """
-    import time as _time
-    import uuid as _uuid
-
     from docling_gfcr_spark.operators.dedup import _free_local_checkpoint
 
     if "conv_id" not in key_cols:
@@ -446,29 +457,15 @@ def upsert_extracted(
                 "duplicate keys in the update set — real MERGE semantics "
                 "forbid multiple source matches; dedupe updates first"
             )
-        # read ONLY the touched partitions (partition-pruned paths)
-        existing = None
-        exists_probe = getattr(storage, "data_partition_exists", None)
-        for pid in touched:
-            if exists_probe is not None:
-                # explicit FileSystem/catalog probe: brand-new buckets are
-                # classified BEFORE the read, so no exception-text matching
-                if not exists_probe(pid):
-                    continue
-                part = storage.read_data_partition(pid).withColumn("part_id", F.lit(pid))
-            else:
-                # third-party Storage without the probe: legacy classification.
-                # ONLY path-missing means "brand-new bucket"; anything else
-                # (corrupt footer, transient IO) must abort, not silently
-                # drop the partition's rows from the merge
-                try:
-                    part = storage.read_data_partition(pid).withColumn("part_id", F.lit(pid))
-                except Exception as e:
-                    msg = str(e)
-                    if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                        continue
-                    raise
-            existing = part if existing is None else existing.unionByName(part)
+        # read ONLY the touched partitions (partition-pruned paths); buckets
+        # never written are absent from the read, and only a read that finds
+        # none of them may mean "all brand-new"
+        try:
+            existing = storage.read_data_partitions(touched)
+        except AnalysisException as e:
+            if not is_missing_input(e):
+                raise
+            existing = None
         if existing is not None:
             survivors = existing.join(upd.select(*keys), keys, "left_anti")
             merged = survivors.unionByName(upd.select(*survivors.columns))
@@ -483,23 +480,6 @@ def upsert_extracted(
         storage.overwrite_data_partitions(merged.repartition(len(touched), "part_id"))
     finally:
         _free_local_checkpoint(upd)
-    rid = run_id or f"upsert-{_uuid.uuid4().hex[:12]}"
-    metrics = (
-        storage.read_data()
-        .where(F.col("part_id").isin(touched))
-        .groupBy("part_id")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum("n_nodes").alias("nodes_classified"),
-            F.sum("n_spans").alias("spans_emitted"),
-            F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
-            F.sum((~F.col("success")).cast("long")).alias("errors"),
-        )
-        .withColumn("run_id", F.lit(rid))
-        .withColumn("n_parts", F.lit(n_parts))
-        .withColumn("status", F.lit("committed"))
-        .withColumn("committed_at", F.lit(_time.time()))
-        .select(*_LINEAGE_COLS)
-    )
-    storage.append_lineage(metrics)
+    rid = run_id or f"upsert-{uuid.uuid4().hex[:12]}"
+    commit_parts(spark, storage, touched, rid, n_parts)
     return {"touched_parts": touched, "n_updates": n_updates, "run_id": rid}

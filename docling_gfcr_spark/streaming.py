@@ -169,8 +169,6 @@ def stream_extract_durable(
 
     Returns the started StreamingQuery (caller drains/stops it).
     """
-    import time as _time
-
     from docling_gfcr_spark import lineage
 
     storage = lineage.ParquetStorage(spark, out_dir)
@@ -182,26 +180,10 @@ def stream_extract_durable(
         storage.overwrite_data_partitions(extracted)
         # read back ONLY this batch's partition path: scanning the whole data
         # dir and filtering would re-list every partition ever written, making
-        # each micro-batch slower as stream history grows
-        metrics = (
-            storage.read_data_partition(int(batch_id))
-            .agg(
-                F.count("*").alias("n_turns"),
-                F.sum("n_nodes").alias("nodes_classified"),
-                F.sum("n_spans").alias("spans_emitted"),
-                F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
-                F.sum((~F.col("success")).cast("long")).alias("errors"),
-            )
-            .withColumn("part_id", F.lit(int(batch_id)))
-            .withColumn("run_id", F.lit("stream"))
-            # streaming parts are batch ids, not hash buckets: n_parts=-1
-            # marks them non-comparable so batch resume refuses to mix
-            .withColumn("n_parts", F.lit(-1))
-            .withColumn("status", F.lit("committed"))
-            .withColumn("committed_at", F.lit(_time.time()))
-            .select(*lineage._LINEAGE_COLS)
-        )
-        storage.append_lineage(metrics)
+        # each micro-batch slower as stream history grows. Streaming parts are
+        # batch ids, not hash buckets: n_parts=-1 marks them non-comparable so
+        # batch resume refuses to mix
+        lineage.commit_parts(spark, storage, [int(batch_id)], "stream", n_parts=-1)
 
     # foreachBatch gets the pre-extraction stream (extraction happens inside
     # the batch fn so a replayed batch re-extracts deterministically)

@@ -113,7 +113,10 @@ def _commit_stage(
     spark: SparkSession, out_dir: str, run_id: str, stage: str, n_out: int,
     stages: tuple[str, ...] = STAGES,
 ) -> None:
-    row = spark.createDataFrame(
+    from docling_gfcr_spark import lineage
+
+    row = lineage.commit_rows(
+        spark,
         [(run_id, stage, stages.index(stage), "committed", n_out, time.time())],
         STAGE_LINEAGE_SCHEMA,
     )
@@ -254,8 +257,8 @@ class _StageRunner:
                 "use a fresh --output."
             )
         if stamped is None or stamped_chain is None:
-            self.spark.createDataFrame(
-                [(fp, chain)], "fingerprint string, stage_chain string"
+            lineage.commit_rows(
+                self.spark, [(fp, chain)], "fingerprint string, stage_chain string"
             ).coalesce(1).write.mode("overwrite").parquet(path)
 
     @property

@@ -4,6 +4,7 @@ without reprocessing committed parts."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from docling_gfcr_spark import lineage, pipeline, transcripts
@@ -39,11 +40,56 @@ def test_crash_resume_no_reprocessing(spark, tmp_path):
     assert data.count() == expected_total
     assert data.select("conv_id", "turn_idx").distinct().count() == expected_total
 
-    # lineage metrics agree with the data
-    agg = data.groupBy("part_id").agg(F.count("*").alias("n")).toPandas().set_index("part_id")
+    # lineage metrics agree with the data, all five of them
+    agg = (
+        data.groupBy("part_id")
+        .agg(
+            F.count("*").alias("n_turns"),
+            F.sum("n_nodes").alias("nodes_classified"),
+            F.sum("n_spans").alias("spans_emitted"),
+            F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
+            F.sum((~F.col("success")).cast("long")).alias("errors"),
+        )
+        .toPandas()
+        .set_index("part_id")
+    )
+    metrics = ["n_turns", "nodes_classified", "spans_emitted", "parse_failures", "errors"]
     for _, row in lin.iterrows():
-        n = agg["n"].get(row.part_id, 0)  # empty parts commit with n_turns=0
-        assert n == row.n_turns
+        for m in metrics:
+            want = agg[m].get(row.part_id, 0)  # empty parts commit all-zero metrics
+            assert want == row[m], (row.part_id, m)
+
+
+def test_read_data_partitions_reads_only_named_parts(spark, tmp_path):
+    """The plural partition read returns exactly the named parts, with
+    part_id; parts never written are skipped, and a read where none exists
+    raises the missing-input error that lets a commit degrade to zeros —
+    the only read failure that may."""
+    st = lineage.ParquetStorage(spark, str(tmp_path / "parts"))
+    with pytest.raises(AnalysisException) as e:
+        st.read_data_partitions([0, 1])
+    assert lineage.is_missing_input(e.value)
+    df = spark.range(12).select(
+        F.col("id").cast("int").alias("x"), (F.col("id") % 3).cast("int").alias("part_id")
+    )
+    st.overwrite_data_partitions(df)
+    got = st.read_data_partitions([1, 2, 7]).groupBy("part_id").count().collect()
+    assert sorted((r.part_id, r["count"]) for r in got) == [(1, 4), (2, 4)]
+    with pytest.raises(AnalysisException) as e:
+        st.read_data_partitions([5, 6])
+    assert lineage.is_missing_input(e.value)
+
+    # only that error degrades: any other read failure fails the commit
+    # instead of appending fabricated all-zero metrics
+    class _Unreadable:
+        def read_data_partitions(self, part_ids):
+            raise AnalysisException("permission denied")
+
+        def append_lineage(self, df):
+            raise AssertionError("committed despite a failed read")
+
+    with pytest.raises(AnalysisException, match="permission denied"):
+        lineage.commit_parts(spark, _Unreadable(), [0], "r", n_parts=4)
 
 
 def test_part_id_stability(spark):
@@ -77,7 +123,7 @@ def test_storage_interface_conformance(spark, tmp_path):
         "overwrite_data_partitions",
         "append_lineage",
         "read_data",
-        "read_data_partition",
+        "read_data_partitions",
         "read_lineage",
     ]
     for m in contract:
@@ -108,7 +154,12 @@ def test_storage_interface_conformance(spark, tmp_path):
     lineage.run_extraction_job(spark, tdf, out, n_parts=4, n_waves=2, storage=rec)
     used = set(rec.calls)
     assert used <= set(contract), used - set(contract)
-    assert {"overwrite_data_partitions", "append_lineage", "read_data", "read_lineage"} <= used
+    assert {
+        "overwrite_data_partitions", "append_lineage", "read_data_partitions", "read_lineage"
+    } <= used
+    # wave metrics come from the wave's own partitions: a full-table read
+    # would list every partition written so far, growing with each wave
+    assert "read_data" not in used
 
     assert not lineage.IcebergStorage.available(spark)  # sandbox: no jar
 
@@ -157,7 +208,7 @@ def test_iceberg_storage_end_to_end(spark, tmp_path):
     st.overwrite_data_partitions(df0b)
     got = {(r.conv_id, r.extracted_text) for r in st.read_data().collect()}
     assert got == {("c1", "t0-v2"), ("c2", "t1")}
-    assert st.read_data_partition(1).count() == 1
+    assert st.read_data_partitions([1]).count() == 1
     lin = spark.createDataFrame(
         [("r1", 0, 2, "committed", 2, 1, 0, 0, 0, 0.0)], lineage.LINEAGE_SCHEMA
     )
@@ -277,22 +328,8 @@ def test_upsert_refuses_streaming_batch_id_table(spark, tmp_path):
     tdf = transcripts.make_transcripts(spark, 4, mean_turns=3, seed=2, parallelism=2)
     ex = pipeline.extract_turns(tdf).withColumn("part_id", F.lit(0))
     st.overwrite_data_partitions(ex)
-    import time
-
-    lin = (
-        ex.groupBy("part_id")
-        .agg(F.count("*").alias("n_turns"),
-             F.sum("n_nodes").alias("nodes_classified"),
-             F.sum("n_spans").alias("spans_emitted"),
-             F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
-             F.sum((~F.col("success")).cast("long")).alias("errors"))
-        .withColumn("run_id", F.lit("stream"))
-        .withColumn("n_parts", F.lit(-1))
-        .withColumn("status", F.lit("committed"))
-        .withColumn("committed_at", F.lit(time.time()))
-        .select(*lineage._LINEAGE_COLS)
-    )
-    st.append_lineage(lin)
+    # the commit stream_extract_durable makes for batch 0
+    lineage.commit_parts(spark, st, [0], "stream", n_parts=-1)
     with pytest.raises(ValueError, match="batch-id"):
         lineage.upsert_extracted(spark, out, ex.drop("part_id"), n_parts=8)
 

@@ -428,3 +428,18 @@ def test_incremental_semantic_committed_side_exchange_free(spark, tmp_path):
         assert "SortMergeJoin" not in p and "CartesianProduct" not in p
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_commit_rows_are_a_local_relation(spark):
+    """Lineage commit rows plan as a driver-local relation: a list-built
+    frame is an RDD (LogicalRDD over parallelize) whose append schedules a
+    job per commit, several times the cost of the local append."""
+    from docling_gfcr_spark import lineage
+
+    rows = [("r", p, 4, "committed", 1, 2, 3, 0, 0, 0.0) for p in range(4)]
+    df = lineage.commit_rows(spark, rows, lineage.LINEAGE_SCHEMA)
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in analyzed and "LogicalRDD" not in analyzed
+    # the exact schema, nullability included: it is the lineage parquet's
+    assert df.schema == spark.createDataFrame([], lineage.LINEAGE_SCHEMA).schema
+    assert [tuple(r) for r in df.collect()] == rows
